@@ -14,11 +14,15 @@ kamodo_dask/kamodo_dask.py:335-341). Two Spark strategies:
    join at runtime from the actual slab size.
 
 2. :func:`interpolate_points_broadcast` — **broadcast slab** (exact parity
-   with the reference's execution): collect the ordered slab to a dense
-   ndarray, broadcast it, and evaluate a vectorized NumPy kernel per Arrow
-   batch of query points via ``mapInPandas``. Right when the slab is small
-   (the reference's canonical 13×17×10×7 workload is ~15k rows) and the
-   point set is large.
+   with the reference's execution): gather the slab with one unordered
+   Arrow collect, order it on the driver into a dense ndarray, broadcast
+   it, and evaluate a vectorized NumPy kernel per Arrow batch of query
+   points via ``mapInPandas``. Right when the slab is small (the
+   reference's canonical 13×17×10×7 workload is ~15k rows) and the point
+   set is large. Like the reference's registration-time interpolators, a
+   registry gathers the slab ONCE at build (:func:`broadcast_slab`) and
+   passes it as ``slab=``: each later call is one map-side job, and the
+   driver holds the slab plus one broadcast until ``release()``.
 
 Both return ``fill_value`` for out-of-bounds points without error
 (kamodo_dask.py:337-338) and treat grid-edge coordinates as in-bounds,
@@ -267,53 +271,77 @@ def _collect_dense_slab(
     arrays: dict[str, np.ndarray],
     fill_value: float,
 ):
-    """Ordered driver collect of the slab as dense ndarrays.
+    """Driver collect of the slab as dense ndarrays.
 
-    Returns ``(axis_list, slabs)`` or ``None`` when the grid is not dense
-    (row count ≠ ∏ axis cardinalities) — the explicit version of the
-    reference's trusted reshape (kamodo_dask.py:325,334). NaN measures become
-    ``fill_value`` here, before interpolation."""
+    One unordered Arrow ``toPandas()`` (a single scan job: no sample job, no
+    range exchange), put in axis order on the driver with ``np.lexsort`` —
+    the slab is driver-sized by construction, so sorting it there is cheaper
+    than a Spark ``orderBy``. Returns ``(axis_list, slabs)`` or ``None`` when
+    the grid is not dense (row count ≠ ∏ axis cardinalities) — the explicit
+    version of the reference's trusted reshape (kamodo_dask.py:325,334). NaN
+    measures become ``fill_value`` here, before interpolation."""
     shape = tuple(len(arrays[ax]) for ax in axes)
     expected = int(np.prod(shape))
-    ordered = (
-        grid_df.select(
-            *[_as_double(ax, grid_df).alias(ax) for ax in axes],
-            *[F.col(m).cast("double").alias(m) for m in measures],
-        )
-        .orderBy(*axes)
-        .toPandas()
-    )
-    if len(ordered) != expected:
+    frame = grid_df.select(
+        *[_as_double(ax, grid_df).alias(ax) for ax in axes],
+        *[F.col(m).cast("double").alias(m) for m in measures],
+    ).toPandas()
+    if len(frame) != expected:
         return None
     # Count alone can't catch a duplicated row masking a missing one (the
     # reshape would then misalign every value after the gap) — the collected
     # frame is driver-sized here, so an exact pandas duplicate check is free.
-    if ordered.duplicated(subset=list(axes)).any():
+    if frame.duplicated(subset=list(axes)).any():
         return None
+    # lexsort's LAST key is the primary one: reverse so axis 1 varies slowest
+    order = np.lexsort([frame[ax].to_numpy() for ax in reversed(axes)])
     slabs = {
-        m: np.nan_to_num(ordered[m].to_numpy(np.float64), nan=fill_value).reshape(shape)
+        m: np.nan_to_num(frame[m].to_numpy(np.float64)[order], nan=fill_value).reshape(shape)
         for m in measures
     }
     return [arrays[ax] for ax in axes], slabs
+
+
+def broadcast_slab(
+    grid_df: DataFrame,
+    axes: tuple[str, ...],
+    measures: list[str],
+    arrays: dict[str, np.ndarray],
+    fill_value: float = 0.0,
+):
+    """Gather the dense slab once (:func:`_collect_dense_slab`) and broadcast
+    ``(axis_list, {measure: ndarray})`` — the prebuilt ``slab=`` that
+    :func:`interpolate_points_broadcast` and :func:`gridded_eval` evaluate
+    against. Raises ``ValueError`` when the slab is not dense or a duplicated
+    node masks a missing one. The caller owns the broadcast: ``destroy()``
+    it when done."""
+    collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
+    if collected is None:
+        shape = tuple(len(arrays[ax]) for ax in axes)
+        n = grid_df.count()
+        raise ValueError(
+            f"grid is not dense: {n} rows != {int(np.prod(shape))} "
+            f"(= {' * '.join(map(str, shape))})"
+        )
+    return grid_df.sparkSession.sparkContext.broadcast(collected)
 
 
 def _fused_kernel_map(
     points_df: DataFrame,
     axes: tuple[str, ...],
     measures: list[str],
-    axis_list: list[np.ndarray],
-    slabs: dict[str, np.ndarray],
+    bc,
     fill_value: float,
 ) -> DataFrame:
-    """Map-side interpolation: broadcast the dense slab, evaluate the NumPy
-    kernel per Arrow batch of points. Preserves the input point schema
-    exactly (timestamp axes convert to epoch seconds *inside* the kernel)
-    and appends one double column per measure — same output contract as the
-    corner join, zero exchanges in the plan."""
+    """Map-side interpolation against a broadcast dense slab (a
+    :func:`broadcast_slab` result): the NumPy kernel runs per Arrow batch of
+    points. Preserves the input point schema exactly (timestamp axes convert
+    to epoch seconds *inside* the kernel) and appends one double column per
+    measure — same output contract as the corner join, zero exchanges in the
+    plan."""
     import pandas as pd  # noqa: F401 — executor-side dependency
 
     spark = points_df.sparkSession
-    bc = spark.sparkContext.broadcast((axis_list, slabs))
     axes_l = list(axes)
     fv = float(fill_value)
     ts_axes = {ax for ax, t in points_df.dtypes if ax in axes_l and t == "timestamp"}
@@ -409,8 +437,8 @@ def interpolate_points(
     if strategy == "auto" and dense_bound <= _FUSED_SLAB_MAX_ROWS:
         collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
         if collected is not None:
-            axis_list, slabs = collected
-            return _fused_kernel_map(points_df, axes, measures, axis_list, slabs, fill_value)
+            bc = grid_df.sparkSession.sparkContext.broadcast(collected)
+            return _fused_kernel_map(points_df, axes, measures, bc, fill_value)
         # non-dense slab: the corner join's coverage accounting handles it
 
     point_cols = points_df.columns
@@ -768,38 +796,30 @@ def interpolate_points_cells(
 
 
 def interpolate_points_broadcast(
-    grid_df: DataFrame,
+    grid_df: DataFrame | None,
     points_df: DataFrame,
     axes: tuple[str, ...] = DEFAULT_AXES,
     measures: list[str] | None = None,
     fill_value: float = 0.0,
     axis_arrays: dict[str, np.ndarray] | None = None,
+    slab=None,
 ) -> DataFrame:
     """Broadcast-slab strategy: dense ndarray on every executor, NumPy kernel
-    over Arrow batches of points (I3a). Collect is ordered + cardinality
-    checked — the explicit version of the reference's trusted reshape
-    (kamodo_dask.py:325,334). Pass ``axis_arrays`` when the axes are already
-    known to skip the per-axis distinct jobs."""
-    measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
-    arrays = axis_arrays or _axis_arrays(grid_df, axes)
-    shape = tuple(len(arrays[ax]) for ax in axes)
-    expected = int(np.prod(shape))
+    over Arrow batches of points (I3a). The gather is cardinality and
+    duplicate checked — the explicit version of the reference's trusted
+    reshape (kamodo_dask.py:325,334). Pass ``axis_arrays`` when the axes are
+    already known to skip the per-axis distinct job.
 
-    collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
-    if collected is None:
-        n = grid_df.count()
-        raise ValueError(
-            f"grid is not dense: {n} rows != {expected} "
-            f"(= {' * '.join(map(str, shape))})"
-        )
-    axis_list, slabs = collected
-    # Delegate to the fused kernel mapper: it preserves the input point
-    # schema EXACTLY (timestamp axes convert to epoch seconds inside the
-    # kernel, session-tz-aware). The earlier local implementation cast
-    # timestamp point columns to double in the OUTPUT, so the same query
-    # returned different schemas depending on which strategy the registry's
-    # size threshold picked.
-    return _fused_kernel_map(points_df, axes, measures, axis_list, slabs, fill_value)
+    Pass ``slab`` (a :func:`broadcast_slab` result holding at least
+    ``measures``) to evaluate against a slab gathered earlier: the call then
+    plans a single ``mapInPandas`` over the points — no scan, no exchange,
+    one job when run; ``grid_df`` may then be None if ``measures`` is given.
+    Without it each call gathers and broadcasts its own slab."""
+    measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
+    if slab is None:
+        arrays = axis_arrays or _axis_arrays(grid_df, axes)
+        slab = broadcast_slab(grid_df, axes, measures, arrays, fill_value)
+    return _fused_kernel_map(points_df, axes, measures, slab, fill_value)
 
 
 def gridded_eval(
@@ -810,6 +830,7 @@ def gridded_eval(
     fill_value: float = 0.0,
     strategy: str = "auto",
     axis_arrays: dict[str, np.ndarray] | None = None,
+    slab=None,
 ) -> DataFrame:
     """Gridded (meshgrid) evaluation — the reference's ``@gridify`` functions
     ``var_ijkl(time=…, lon=…, lat=…, h=…)`` (kamodo_dask.py:343-348).
@@ -827,7 +848,9 @@ def gridded_eval(
     broadcast — and validated there, so typos raise instead of silently
     running auto). Pass ``axis_arrays`` (e.g. the registry's cached arrays)
     to skip re-running the distinct-axis aggregation on every call — on a
-    big grid that is a full-table job per invocation.
+    big grid that is a full-table job per invocation. Pass ``slab`` (a
+    :func:`broadcast_slab` result) to evaluate against that broadcast; it
+    implies ``strategy="broadcast"``.
     """
     coords = coords or {}
     arrays = axis_arrays or _axis_arrays(grid_df, axes)
@@ -860,9 +883,9 @@ def gridded_eval(
         cols.append(F.element_at(F.lit(vals_list), idx).alias(ax))
     mesh = spark.range(n_mesh).select(*cols)
 
-    if strategy == "broadcast":
+    if strategy == "broadcast" or slab is not None:
         return interpolate_points_broadcast(
-            grid_df, mesh, axes, measures, fill_value, axis_arrays=arrays
+            grid_df, mesh, axes, measures, fill_value, axis_arrays=arrays, slab=slab
         )
     return interpolate_points(
         grid_df, mesh, axes, measures, fill_value, axis_arrays=arrays,

@@ -60,17 +60,26 @@ def units_of(df: DataFrame, column: str) -> str:
     raise KeyError(column)
 
 
+def grid_levels(
+    df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES
+) -> tuple[int, dict[str, list]]:
+    """Row count and distinct sorted coordinate values per axis, in ONE
+    aggregation pass: ``count(*)`` plus a partial-aggregated ``collect_set``
+    per axis, sorted on the driver. Axes are small by construction (their
+    cardinality product equals the dense-grid row count), so collecting them
+    is safe even for a 100 TB grid table. Everything a registry build needs
+    from the model layer — density check, shape, levels, bounds, midpoint —
+    derives from this one result."""
+    row = df.agg(
+        F.count("*").alias("_rows"), *[F.collect_set(ax).alias(ax) for ax in axes]
+    ).collect()[0]
+    return row["_rows"], {ax: sorted(row[ax]) for ax in axes}
+
+
 def grid_axes(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, list]:
     """Distinct sorted coordinate values per axis (A3; ``df.index.levels``,
-    kamodo_dask.py:316-317). Axes are small by construction (their cardinality
-    product equals the dense-grid row count), so collecting them to the driver
-    is safe even for a 100 TB grid table. ONE job for all axes — a
-    partial-aggregated ``collect_set`` per axis in a single pass, sorted on
-    the driver."""
-    row = df.agg(
-        *[F.collect_set(ax).alias(ax) for ax in axes]
-    ).collect()[0]
-    return {ax: sorted(row[ax]) for ax in axes}
+    kamodo_dask.py:316-317) — the levels half of :func:`grid_levels`."""
+    return grid_levels(df, axes)[1]
 
 
 def grid_bounds(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, tuple]:
@@ -138,23 +147,28 @@ def assert_time_bounds(df: DataFrame, time_col: str, start, end) -> None:
         )
 
 
+def check_dense(n_rows: int, levels: dict[str, list]) -> dict[str, int]:
+    """The dense-grid invariant over a :func:`grid_levels` result: row count
+    == ∏ per-axis cardinalities. Returns the axis sizes; raises
+    ``ValueError`` on violation."""
+    sizes = {ax: len(vs) for ax, vs in levels.items()}
+    expected = 1
+    for n in sizes.values():
+        expected *= n
+    if n_rows != expected:
+        raise ValueError(
+            f"grid is not dense: {n_rows} rows != "
+            f"{expected} = {' * '.join(f'{ax}:{n}' for ax, n in sizes.items())}"
+        )
+    return sizes
+
+
 def validate_dense(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, int]:
     """Check the dense-grid invariant: row count == ∏ per-axis cardinalities.
 
     The reference *assumes* this for its reshape (kamodo_dask.py:325,334) and
     silently corrupts data when violated; here it is an explicit one-pass
-    check. Returns the axis sizes. Raises ``ValueError`` on violation.
+    check (:func:`grid_levels` + :func:`check_dense`). Returns the axis
+    sizes. Raises ``ValueError`` on violation.
     """
-    aggs = [F.count_distinct(ax).alias(ax) for ax in axes]
-    aggs.append(F.count("*").alias("_rows"))
-    row = df.agg(*aggs).collect()[0]
-    sizes = {ax: row[ax] for ax in axes}
-    expected = 1
-    for n in sizes.values():
-        expected *= n
-    if row["_rows"] != expected:
-        raise ValueError(
-            f"grid is not dense: {row['_rows']} rows != "
-            f"{expected} = {' * '.join(f'{ax}:{n}' for ax, n in sizes.items())}"
-        )
-    return sizes
+    return check_dense(*grid_levels(df, axes))

@@ -9,23 +9,38 @@ variable ``rgi`` by reference (kamodo_dask.py:328-351), so every registered
 interpolator silently evaluates the *last* measure's grid. This registry
 binds per-measure state at registration time — each measure interpolates its
 own data (the intended semantics; guarded by a test).
+
+Build cost is paid once, as the reference pays it at registration
+(kamodo_dask.py:301-357): one aggregation pass gives the row count and every
+axis's levels (density check, shape, bounds and midpoint all derive from it),
+and a ``strategy="broadcast"`` registry then gathers its slab once for all
+measures and holds one broadcast. Each point call is then one map-side job
+(a single ``mapInPandas`` over the points: no scan, no exchange), and so is
+every ``*_ijkl``, derived and ``plot_data`` evaluation. The driver holds the
+slab plus that broadcast until :meth:`KamodoSpark.release`.
 """
 
 from __future__ import annotations
 
+import warnings
+
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from kamodo_dask_spark.grid.model import (
+# validate_dense and grid_axes are no longer called here; they stay bound in
+# this module because perfbench/tracer.py patches these attributes.
+from kamodo_dask_spark.grid.model import (  # noqa: F401
     DEFAULT_AXES,
+    check_dense,
     grid_axes,
-    grid_bounds,
-    grid_midpoint,
+    grid_levels,
     normalize_measure_columns,
     units_of,
     validate_dense,
 )
 from kamodo_dask_spark.grid.interpolate import (
     _axis_arrays,
+    broadcast_slab,
     build_cell_relation,
     gridded_eval,
     interpolate_points,
@@ -61,16 +76,11 @@ class KamodoSpark(dict):
         self.measures = [c for c in self.df.columns if c not in self.axes]
         self.units = {m: units_of(self.df, m) for m in self.measures}
 
-        sizes = validate_dense(self.df, self.axes)
+        n_rows, self.levels = grid_levels(self.df, self.axes)
+        sizes = check_dense(n_rows, self.levels)
         self.shape = tuple(sizes[ax] for ax in self.axes)
-        self.levels = grid_axes(self.df, self.axes)
-        # derive the float64 arrays from the levels already collected — a
-        # second grid_axes() here would re-run the distinct-axis jobs
         self._axis_arrays = _axis_arrays(self.df, self.axes, levels=self.levels)
 
-        n_rows = 1
-        for n in self.shape:
-            n_rows *= n
         if strategy == "auto":
             strategy = "broadcast" if n_rows <= BROADCAST_MAX_ROWS else "corner"
         self.strategy = strategy
@@ -80,10 +90,19 @@ class KamodoSpark(dict):
         # and answer every point query with a single equi-join — no slab
         # re-scan, no 2^d explode, per query. Built over all measures in
         # one pass so k measures share the d window shuffles.
+        # "broadcast" gathers the dense slab ONCE for all measures and holds
+        # one broadcast that every point/gridded/derived call evaluates
+        # against; a slab that is not dense (or has a duplicated node masking
+        # a missing one) raises here, at build.
         self._cells = None
-        if strategy == "cell":
+        self._slab = None
+        if strategy == "broadcast":
+            self._slab = broadcast_slab(
+                self.df, self.axes, self.measures, self._axis_arrays, self.fill_value
+            )
+        elif strategy == "cell":
             # build_cell_relation runs its own density aggregation even
-            # though validate_dense just passed — NOT redundant: the
+            # though check_dense just passed — NOT redundant: the
             # cardinality-product check cannot see a duplicated node
             # masking a missing one, the build's count+distinct check can
             # (and a fooled windowed lead would silently corrupt cells).
@@ -99,70 +118,92 @@ class KamodoSpark(dict):
             # bind `m` at definition time (default-arg binding) — the fix for
             # the reference's late-binding closure bug.
             def point_fn(points_df: DataFrame, _m: str = m) -> DataFrame:
-                if self.strategy == "broadcast":
-                    return interpolate_points_broadcast(
-                        self.df,
-                        points_df,
-                        self.axes,
-                        [_m],
-                        self.fill_value,
-                        axis_arrays=self._axis_arrays,
-                    )
-                if self.strategy == "cell":
-                    if self._cells is None:
-                        # loud use-after-release: without this the query
-                        # dies with an opaque NoneType AttributeError deep
-                        # in build_cell_relation
-                        raise RuntimeError(
-                            "this cell-strategy registry has been "
-                            "release()d — rebuild it (or hold the current "
-                            "refresher registry, not a stale reference)"
-                        )
-                    return interpolate_points_cells(
-                        None,
-                        points_df,
-                        self.axes,
-                        [_m],
-                        self.fill_value,
-                        axis_arrays=self._axis_arrays,
-                        cells=self._cells,
-                    )
-                return interpolate_points(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    [_m],
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
+                return self._points(points_df, [_m])
 
             def gridded_fn(_m: str = m, **coords) -> DataFrame:
-                return gridded_eval(
-                    self.df,
-                    coords,
-                    self.axes,
-                    [_m],
-                    self.fill_value,
-                    strategy="broadcast" if self.strategy == "broadcast" else "auto",
-                    axis_arrays=self._axis_arrays,
-                )
+                return self._gridded(coords, [_m])
 
             point_fn.units = self.units[m]
             gridded_fn.units = self.units[m]
             self[m] = point_fn
             self[f"{m}_ijkl"] = gridded_fn
 
+    def _held(self, state):
+        """The held slab broadcast / cell relation, or a loud use-after-
+        release error — without it the query dies with an opaque failure
+        deep in Spark (a destroyed broadcast, a NoneType relation)."""
+        if state is None:
+            raise RuntimeError(
+                f"this {self.strategy}-strategy registry has been release()d "
+                "— rebuild it (or hold the current refresher registry, not a "
+                "stale reference)"
+            )
+        return state
+
+    def _points(self, points_df: DataFrame, measures: list[str]) -> DataFrame:
+        """Point interpolation of ``measures`` with the registry's strategy."""
+        if self.strategy == "broadcast":
+            return interpolate_points_broadcast(
+                self.df,
+                points_df,
+                self.axes,
+                measures,
+                self.fill_value,
+                slab=self._held(self._slab),
+            )
+        if self.strategy == "cell":
+            return interpolate_points_cells(
+                None,
+                points_df,
+                self.axes,
+                measures,
+                self.fill_value,
+                axis_arrays=self._axis_arrays,
+                cells=self._held(self._cells),
+            )
+        return interpolate_points(
+            self.df,
+            points_df,
+            self.axes,
+            measures,
+            self.fill_value,
+            axis_arrays=self._axis_arrays,
+        )
+
+    def _gridded(self, coords: dict, measures: list[str]) -> DataFrame:
+        """Gridded evaluation of ``measures``; broadcast registries evaluate
+        against their held slab."""
+        return gridded_eval(
+            self.df,
+            coords,
+            self.axes,
+            measures,
+            self.fill_value,
+            axis_arrays=self._axis_arrays,
+            slab=self._held(self._slab) if self.strategy == "broadcast" else None,
+        )
+
     def release(self) -> None:
-        """Release engine-held state (the persisted cell relation, when
-        ``strategy="cell"``). Call when replacing a registry — e.g. a slab
-        refresh loop — so superseded cell relations don't accumulate in
-        the storage layer. No-op for other strategies."""
-        if self._cells is not None:
+        """Release engine-held state: the slab broadcast (``"broadcast"``) or
+        the persisted cell relation (``"cell"``). Call when replacing a
+        registry — e.g. a slab refresh loop — so superseded slabs don't
+        accumulate on the driver, the executors or the storage layer. Later
+        calls on this registry raise ``RuntimeError``. No-op for ``"corner"``.
+        A failed unpersist/destroy is reported as a warning, not raised."""
+        for attr, drop in (("_slab", "destroy"), ("_cells", "unpersist")):
+            state = getattr(self, attr)
+            if state is None:
+                continue
+            setattr(self, attr, None)
             try:
-                self._cells.unpersist()
-            except Exception:
-                pass
-            self._cells = None
+                getattr(state, drop)()
+            except Exception as e:
+                warnings.warn(
+                    f"KamodoSpark.release(): {drop}() of the {self.strategy} "
+                    f"state failed: {e!r}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
 
     def register(self, name: str, expr: str, units: str = "") -> None:
         """Register a DERIVED function: a Spark SQL expression over already-
@@ -195,36 +236,11 @@ class KamodoSpark(dict):
             )
 
         def point_fn(points_df: DataFrame, _deps=tuple(deps), _expr=expr) -> DataFrame:
-            if self.strategy == "broadcast":
-                out = interpolate_points_broadcast(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    list(_deps),
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
-            else:
-                out = interpolate_points(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    list(_deps),
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
+            out = self._points(points_df, list(_deps))
             return out.select(*points_df.columns, F.expr(_expr).alias(name))
 
         def gridded_fn(_deps=tuple(deps), _expr=expr, **coords) -> DataFrame:
-            out = gridded_eval(
-                self.df,
-                coords,
-                self.axes,
-                list(_deps),
-                self.fill_value,
-                strategy="broadcast" if self.strategy == "broadcast" else "auto",
-                axis_arrays=self._axis_arrays,
-            )
+            out = self._gridded(coords, list(_deps))
             keep = [c for c in out.columns if c not in _deps]
             return out.select(*keep, F.expr(_expr).alias(name))
 
@@ -300,12 +316,14 @@ class KamodoSpark(dict):
         }
 
     def get_bounds(self) -> dict:
-        """Per-axis (min, max) — ``get_bounds``, kamodo_dask.py:353-354."""
-        return grid_bounds(self.df, self.axes)
+        """Per-axis (min, max) of the raw levels held since build — no Spark
+        job (``get_bounds``, kamodo_dask.py:353-354)."""
+        return {ax: (lv[0], lv[-1]) for ax, lv in self.levels.items()}
 
     def get_midpoint(self) -> dict:
-        """Per-axis mean of distinct values — ``get_midpoint``, kamodo_dask.py:356-357."""
-        return grid_midpoint(self.df, self.axes)
+        """Per-axis mean of the distinct levels, timestamps as epoch seconds
+        — no Spark job (``get_midpoint``, kamodo_dask.py:356-357)."""
+        return {ax: float(np.mean(arr)) for ax, arr in self._axis_arrays.items()}
 
     def __repr__(self) -> str:  # pragma: no cover
         entries = ", ".join(

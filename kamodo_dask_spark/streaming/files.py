@@ -84,8 +84,12 @@ class SlabRefresher:
     a parquet sink directory) and rebuilds the interpolator registry over the
     trailing time window — the streaming equivalent of re-running
     ``df_from_dask`` + ``KamodoDask`` per wall-clock tick
-    (docs/interpolator.md:25-31). On a cluster the rebuilt slab is a new
-    broadcast variable; queries between refreshes keep the previous slab.
+    (docs/interpolator.md:25-31). With ``strategy="broadcast"`` (what
+    ``"auto"`` picks for small slabs) each refresh gathers the rebuilt slab
+    into one new broadcast variable; with ``"cell"`` it persists a new cell
+    relation. The replaced registry is ``release()``d, which frees that
+    state, so a query must go through :meth:`current` — a call on a stale
+    registry reference raises ``RuntimeError``.
     """
 
     def __init__(

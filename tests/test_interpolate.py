@@ -503,3 +503,35 @@ def test_gridded_eval_empty_axis_list_raises(spark, grid_df):
 
     with pytest.raises(ValueError, match="empty coordinate list"):
         gridded_eval(grid_df, {"lon": []}, AXES, ["v"])
+
+
+def test_slab_gather_orders_shuffled_input_on_the_driver(spark, grid_df, values_nd):
+    """The unordered gather puts a row-shuffled, repartitioned slab back in
+    axis order: every measure array equals the sorted reference, and a
+    prebuilt slab broadcast answers like the per-call path."""
+    from kamodo_dask_spark.grid.interpolate import (
+        _axis_arrays,
+        _collect_dense_slab,
+        broadcast_slab,
+    )
+
+    shuffled = grid_df.orderBy(F.rand(11)).repartition(5)
+    arrays = _axis_arrays(shuffled, AXES)
+    axis_list, slabs = _collect_dense_slab(shuffled, AXES, ["v"], arrays, 0.0)
+    for got, want in zip(axis_list, (TIME_V, LON_V, LAT_V, H_V)):
+        np.testing.assert_array_equal(got, want)
+    np.testing.assert_array_equal(slabs["v"], values_nd)
+
+    slab = broadcast_slab(shuffled, AXES, ["v"], arrays)
+    try:
+        got = {
+            r["point_id"]: r["v"]
+            for r in interpolate_points_broadcast(
+                None, _points_df(spark), AXES, ["v"], slab=slab
+            ).collect()
+        }
+    finally:
+        slab.destroy()
+    pts = query_points()
+    for p, e in zip(pts, oracle(pts)):
+        assert got[p[0]] == pytest.approx(e, rel=1e-9, abs=1e-12), f"point {p}"

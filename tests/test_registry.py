@@ -171,17 +171,147 @@ def test_registry_cell_strategy_matches_broadcast(spark, grid_dir):
 
 
 def test_cell_registry_use_after_release_raises_clearly(spark):
-    """Querying a released cell-strategy registry raises a RuntimeError
-    naming the cause, not an opaque NoneType failure."""
+    """Querying a released cell- or broadcast-strategy registry raises a
+    RuntimeError naming the cause, not an opaque NoneType failure or a
+    destroyed-broadcast error deep in Spark."""
     rows = [
         (float(t), float(x), t + 2.0 * x)
         for t in (0.0, 1.0, 2.0)
         for x in (0.0, 1.0, 2.0)
     ]
     df = spark.createDataFrame(rows, "time double, lon double, rho double")
-    reg = KamodoSpark(df, axes=("time", "lon"), strategy="cell")
     pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
-    assert reg["rho"](pts).count() == 1
-    reg.release()
-    with pytest.raises(RuntimeError, match="release"):
-        reg["rho"](pts)
+    for strategy in ("cell", "broadcast"):
+        reg = KamodoSpark(df, axes=("time", "lon"), strategy=strategy)
+        reg["twice"] = "2 * rho"
+        assert reg["rho"](pts).count() == 1
+        reg.release()
+        assert reg._cells is None and reg._slab is None
+        calls = [lambda: reg["rho"](pts), lambda: reg["twice"](pts)]
+        if strategy == "broadcast":  # gridded calls read the held slab too
+            calls.append(lambda: reg["rho_ijkl"](time=0.5))
+        for call in calls:
+            with pytest.raises(RuntimeError, match="release"):
+                call()
+        reg.release()  # idempotent
+
+
+def test_release_warns_instead_of_swallowing(spark):
+    """A failed destroy/unpersist is reported, not silently dropped."""
+    rows = [(float(t), float(x), t + x) for t in (0.0, 1.0) for x in (0.0, 1.0)]
+    reg = KamodoSpark(
+        spark.createDataFrame(rows, "time double, lon double, rho double"),
+        axes=("time", "lon"),
+        strategy="broadcast",
+    )
+    slab = reg._slab
+
+    class Failing:
+        def destroy(self):
+            raise OSError("boom")
+
+    reg._slab = Failing()
+    with pytest.warns(RuntimeWarning, match="boom"):
+        reg.release()
+    assert reg._slab is None
+    slab.destroy()
+
+
+class _Jobs:
+    """Spark jobs submitted inside the block, counted from its job group."""
+
+    def __init__(self, spark, name):
+        self.sc = spark.sparkContext
+        self.gid = f"test-registry-{name}"
+        self.ids = []
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.gid, self.gid)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the async listener bus — drain it first
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        self.ids = list(self.sc.statusTracker().getJobIdsForGroup(self.gid))
+
+
+def test_broadcast_registry_gathers_once_and_calls_map_side(spark, grid_dir):
+    """A broadcast registry pays its slab gather at build (one fused model
+    pass + one unordered collect: <= 3 jobs); each point call is then ONE
+    job whose plan has no Exchange and no Sort, bounds/midpoint run no job,
+    and repeated calls agree."""
+    from kamodo_dask_spark.plans.checks import executed_plan
+
+    start = GRID_START + timedelta(minutes=5)
+    end = GRID_START + timedelta(minutes=95)
+    with pytest.warns(UserWarning):
+        df = load_grid_range(spark, f"{grid_dir}/", start, end, h_range=(292500.0, 357500.0))
+    with _Jobs(spark, "build") as build:
+        reg = KamodoSpark(df)
+    assert reg.strategy == "broadcast"
+    assert 1 <= len(build.ids) <= 3, build.ids
+    try:
+        t_mid = (GRID_START + timedelta(minutes=40)).timestamp()
+        pts = spark.createDataFrame(
+            [(0, t_mid, 90.0, 0.0, 325000.0), (1, t_mid + 213.0, 181.5, 12.5, 300001.0)],
+            "point_id long, time double, lon double, lat double, h double",
+        )
+        answers = []
+        for i in range(2):
+            with _Jobs(spark, f"call-{i}") as call:
+                out = reg["T"](pts)
+                answers.append(sorted(out.collect()))
+            assert len(call.ids) == 1, call.ids
+            plan = executed_plan(out)
+            assert "Exchange" not in plan and "Sort" not in plan, plan
+        assert answers[0] == answers[1]
+        assert answers[0][0]["T"] == pytest.approx(
+            temp_fn(t_mid, 90.0, 0.0, 325000.0), rel=1e-6
+        )
+        with _Jobs(spark, "gridded") as gridded:
+            assert len(reg["T_ijkl"](time=t_mid, lat=0.0).collect()) == 17 * 3
+        assert len(gridded.ids) == 1, gridded.ids
+        with _Jobs(spark, "extent") as extent:
+            reg.get_bounds()
+            reg.get_midpoint()
+        assert extent.ids == []
+    finally:
+        reg.release()
+
+
+def test_bounds_and_midpoint_match_the_spark_aggregates(spark):
+    """The registry's job-free bounds/midpoint equal the model layer's
+    Spark aggregates, timestamp axis included (epoch-second midpoint)."""
+    from datetime import datetime
+
+    from kamodo_dask_spark.grid.model import grid_bounds, grid_midpoint
+
+    times = [datetime(2024, 3, 1, 0, 10 * k) for k in range(3)]
+    rows = [(t, x, float(k + x)) for k, t in enumerate(times) for x in (-1.5, 0.0, 4.0)]
+    df = spark.createDataFrame(rows, "time timestamp, lon double, rho double")
+    reg = KamodoSpark(df, axes=("time", "lon"))
+    try:
+        assert reg.get_bounds() == grid_bounds(df, ("time", "lon"))
+        want = grid_midpoint(df, ("time", "lon"))
+        got = reg.get_midpoint()
+        assert set(got) == set(want)
+        for ax in want:
+            assert type(got[ax]) is type(want[ax])
+            assert got[ax] == pytest.approx(want[ax], rel=1e-15)
+    finally:
+        reg.release()
+
+
+def test_broadcast_registry_rejects_bad_slab_at_build(spark):
+    """A non-dense slab, and one where a duplicated node masks a missing
+    one (row count still equals the cardinality product), raise at build
+    with the density message — not on the first call."""
+    rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0) for x2 in (0.0, 1.0)]
+    holed = spark.createDataFrame(rows[:-1], "x1 double, x2 double, val double")
+    with pytest.raises(ValueError, match="grid is not dense"):
+        KamodoSpark(holed, axes=("x1", "x2"), strategy="broadcast")
+    masked = spark.createDataFrame(rows[:-1] + [rows[0]], "x1 double, x2 double, val double")
+    with pytest.raises(ValueError, match="grid is not dense"):
+        KamodoSpark(masked, axes=("x1", "x2"), strategy="broadcast")
